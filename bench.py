@@ -178,8 +178,12 @@ def main() -> None:
                 # heuristic read flat sf0.1 ratios as "env var ignored".
                 # These three fields prove the env override from the
                 # artifact alone. (Flat 8-vs-32 ratios at sf0.1 are real:
-                # per-query fixed cost — Catalyst + AQE + codegen, ~0.5-1s —
-                # dominates at this SF; only dd_minhash is core-sensitive.)
+                # per-query fixed cost dominates at this SF; only dd_minhash
+                # is core-sensitive. `perfbench/run.py --trace 1` splits it,
+                # relational warm pass on 4 cores, per query: ~0.15 s
+                # Python-side plan construction, ~25 ms Catalyst, ~0.2 s
+                # codegen compile cold and ~0 warm, as the codegen cache
+                # holds the working set.)
                 "effective_cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1)),
                 "master": spark.sparkContext.master,
                 "default_parallelism": spark.sparkContext.defaultParallelism,

@@ -1,12 +1,13 @@
-"""Vectorized XXH64 (seed fixed by caller) over small byte windows, NumPy.
+"""Vectorized XXH64 (seed fixed by caller) over byte windows, NumPy.
 
-Reimplements the reference XXH64 short-input path (total length < 32 bytes:
-no v1..v4 stripe accumulators) exactly as Spark's
+Reimplements XXH64 exactly as Spark's
 ``org.apache.spark.sql.catalyst.expressions.XXH64`` executes it for
-UTF8String inputs, so that ``xxh64_short(windows, lengths, seed=42)`` is
-bit-for-bit equal to ``F.xxhash64(col)`` on the same bytes. Equality is
-pinned by tests/test_dedup.py against Spark itself on random inputs of
-every length 0..31 (including multi-byte UTF-8) and on the full corpus.
+UTF8String inputs, so that ``xxh64_short(windows, lengths, seed=42)`` (the
+short-input path, total length < 32 bytes: no v1..v4 stripe accumulators)
+and ``xxh64`` (any length) are bit-for-bit equal to ``F.xxhash64(col)`` on
+the same bytes. tests/test_operators.py pins both against Spark itself on
+random inputs: ``xxh64_short`` on every length 0..31, ``xxh64`` on every
+length 0..100 (1-3 stripes), each with multi-byte UTF-8 samples.
 
 Why it exists (round 16, guide §4.2/§2.4): the MinHash signature stage
 hashes millions of 5-char shingles. Doing it here — one NumPy expression
@@ -38,8 +39,8 @@ def xxh64(data: np.ndarray, lengths: np.ndarray, seed: int = 42) -> np.ndarray:
     Rows shorter than 32 bytes take the seeded short init; rows of 32+
     bytes run the v1..v4 stripe accumulators over floor(len/32) stripes,
     then both converge on the shared 8/4/1-byte tail. Same layout contract
-    as xxh64_short; bit-equal to Spark's xxhash64 (pinned by test on every
-    length 0..100)."""
+    as xxh64_short; bit-equal to Spark's xxhash64 (pinned against it on
+    every length 0..100 by tests/test_operators.py)."""
     if data.ndim != 2 or data.dtype != np.uint8:
         raise ValueError("data must be (N, maxlen) uint8")
     n, maxlen = data.shape

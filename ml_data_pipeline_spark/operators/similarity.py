@@ -317,6 +317,106 @@ def ivf_candidate_pairs(
     )
 
 
+# Lloyd assignment for build_ivf_index_exact as an Arrow kernel. The
+# expression-tree assign — n_clusters aggregate folds over dim-wide
+# zip_with arrays, a least() and a when-chain — built a NEW ~(n_clusters x dim)-node plan per Lloyd iteration whose
+# Catalyst + Janino time dominated the gate (build_exact 11.9s cold at
+# sf0.01 for ~0.2s of data work). The Arrow kernel reproduces the
+# pinned arithmetic EXACTLY — per-dim (x - y)^2 in float64 folded in
+# index order (acc = acc + d_i, the zip_with/aggregate order), ties to
+# the lowest cluster index (first-minimum), rows with NULL/ragged __qv
+# assigned a NULL cluster exactly as null-poisoned distances fall out
+# of least()/when — and the DuckDB oracle's iteration-by-iteration
+# replay (hash parity) is the gate that proves it.
+def _ivf_assign_kernel(cents: list[list[float]], with_stats: bool):
+    import numpy as np
+    import pyarrow as pa
+
+    C = np.array(cents, dtype=np.float64)  # (k, dim)
+
+    def compute(batches):
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            qcol = batch.column(batch.schema.get_field_index("__qv"))
+            offs = np.asarray(qcol.offsets)
+            vals = qcol.values
+            good = np.ones(n, dtype=bool)
+            if qcol.null_count or vals.null_count:
+                valid = qcol.is_valid().to_numpy(zero_copy_only=False)
+                good &= valid
+            lens = offs[1:] - offs[:-1]
+            good &= lens == C.shape[1]
+            if vals.null_count:
+                # `values` ignores a slice: entries past offs[-1] belong to
+                # no row here, so the last segment must end at offs[-1]
+                elem_ok = vals.is_valid().to_numpy(zero_copy_only=False)
+                ok_counts = np.add.reduceat(
+                    np.concatenate([elem_ok[: offs[-1]], [False]]).astype(np.int64),
+                    offs[:-1],
+                )[:n]
+                good &= np.where(lens > 0, ok_counts == lens, True)
+            if vals.null_count:
+                vals = vals.fill_null(0)  # only excluded rows read these
+            cl = np.full(n, -1, dtype=np.int64)
+            if good.any():
+                flat = np.asarray(vals.to_numpy(zero_copy_only=False), dtype=np.float64)
+                gidx = np.where(good)[0]
+                X = flat[
+                    (offs[:-1][gidx, None] + np.arange(C.shape[1])[None, :]).astype(
+                        np.int64
+                    )
+                ]  # (g, dim) exact long->double
+                dists = np.zeros((len(gidx), C.shape[0]), dtype=np.float64)
+                for i in range(C.shape[1]):  # sequential per-dim fold:
+                    d = X[:, i : i + 1] - C[None, :, i]  # same IEEE order as
+                    dists += d * d  # aggregate(zip_with(...))
+                cl[gidx] = np.argmin(dists, axis=1)  # first min = lowest index
+            cl_arr = pa.array(
+                np.where(cl >= 0, cl, 0).astype(np.int32), type=pa.int32()
+            )
+            if (cl < 0).any():
+                cl_arr = pa.array(
+                    [int(c) if c >= 0 else None for c in cl], type=pa.int32()
+                )
+            if not with_stats:
+                yield pa.RecordBatch.from_arrays(
+                    list(batch.columns) + [cl_arr], batch.schema.names + ["ivf_cluster"]
+                )
+                continue
+            # per-batch partial centroid stats: integer per-dim sums and
+            # counts per cluster — order-independent exact longs, merged
+            # by a tiny JVM groupBy exactly like the posexplode shape
+            gidx = np.where(cl >= 0)[0]
+            if len(gidx) == 0:
+                continue
+            flat_l = np.asarray(vals.to_numpy(zero_copy_only=False), dtype=np.int64)
+            Xl = flat_l[
+                (offs[:-1][gidx, None] + np.arange(C.shape[1])[None, :]).astype(
+                    np.int64
+                )
+            ]
+            ks, ds_, sxs, ns = [], [], [], []
+            for k in np.unique(cl[gidx]):
+                rows = Xl[cl[gidx] == k]
+                ks.extend([int(k)] * C.shape[1])
+                ds_.extend(range(C.shape[1]))
+                sxs.extend(rows.sum(axis=0, dtype=np.int64).tolist())
+                ns.extend([rows.shape[0]] * C.shape[1])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(ks, type=pa.int32()),
+                    pa.array(ds_, type=pa.int32()),
+                    pa.array(sxs, type=pa.int64()),
+                    pa.array(ns, type=pa.int64()),
+                ],
+                ["ivf_cluster", "__i", "__sx", "__n"],
+            )
+
+    return compute
+
+
 def build_ivf_index_exact(
     df: DataFrame,
     n_clusters: int = 16,
@@ -372,103 +472,6 @@ def build_ivf_index_exact(
     cents = [[float(v) for v in r["__qv"]] for r in init_rows]
     dim = len(cents[0])
 
-    # r16 (guide §4.2): the expression-tree assign — n_clusters aggregate
-    # folds over dim-wide zip_with arrays, a least() and a when-chain —
-    # built a NEW ~(n_clusters x dim)-node plan per Lloyd iteration whose
-    # Catalyst + Janino time dominated the gate (build_exact 11.9s cold at
-    # sf0.01 for ~0.2s of data work). The Arrow kernel reproduces the
-    # pinned arithmetic EXACTLY — per-dim (x - y)^2 in float64 folded in
-    # index order (acc = acc + d_i, the zip_with/aggregate order), ties to
-    # the lowest cluster index (first-minimum), rows with NULL/ragged __qv
-    # assigned a NULL cluster exactly as null-poisoned distances fall out
-    # of least()/when — and the DuckDB oracle's iteration-by-iteration
-    # replay (hash parity) is the gate that proves it.
-
-    def _assign_kernel(cents: list[list[float]], with_stats: bool):
-        import numpy as np
-        import pyarrow as pa
-
-        C = np.array(cents, dtype=np.float64)  # (k, dim)
-
-        def compute(batches):
-            for batch in batches:
-                n = batch.num_rows
-                if n == 0:
-                    continue
-                qcol = batch.column(batch.schema.get_field_index("__qv"))
-                offs = np.asarray(qcol.offsets)
-                vals = qcol.values
-                good = np.ones(n, dtype=bool)
-                if qcol.null_count or vals.null_count:
-                    valid = qcol.is_valid().to_numpy(zero_copy_only=False)
-                    good &= valid
-                lens = offs[1:] - offs[:-1]
-                good &= lens == C.shape[1]
-                if vals.null_count:
-                    elem_ok = vals.is_valid().to_numpy(zero_copy_only=False)
-                    ok_counts = np.add.reduceat(
-                        np.concatenate([elem_ok, [False]]).astype(np.int64),
-                        np.minimum(offs[:-1], len(elem_ok)),
-                    )[:n]
-                    good &= np.where(lens > 0, ok_counts == lens, True)
-                if vals.null_count:
-                    vals = vals.fill_null(0)  # only excluded rows read these
-                cl = np.full(n, -1, dtype=np.int64)
-                if good.any():
-                    flat = np.asarray(vals.to_numpy(zero_copy_only=False), dtype=np.float64)
-                    gidx = np.where(good)[0]
-                    X = flat[
-                        (offs[:-1][gidx, None] + np.arange(C.shape[1])[None, :]).astype(
-                            np.int64
-                        )
-                    ]  # (g, dim) exact long->double
-                    dists = np.zeros((len(gidx), C.shape[0]), dtype=np.float64)
-                    for i in range(C.shape[1]):  # sequential per-dim fold:
-                        d = X[:, i : i + 1] - C[None, :, i]  # same IEEE order as
-                        dists += d * d  # aggregate(zip_with(...))
-                    cl[gidx] = np.argmin(dists, axis=1)  # first min = lowest index
-                cl_arr = pa.array(
-                    np.where(cl >= 0, cl, 0).astype(np.int32), type=pa.int32()
-                )
-                if (cl < 0).any():
-                    cl_arr = pa.array(
-                        [int(c) if c >= 0 else None for c in cl], type=pa.int32()
-                    )
-                if not with_stats:
-                    yield pa.RecordBatch.from_arrays(
-                        list(batch.columns) + [cl_arr], batch.schema.names + ["ivf_cluster"]
-                    )
-                    continue
-                # per-batch partial centroid stats: integer per-dim sums and
-                # counts per cluster — order-independent exact longs, merged
-                # by a tiny JVM groupBy exactly like the posexplode shape
-                gidx = np.where(cl >= 0)[0]
-                if len(gidx) == 0:
-                    continue
-                flat_l = np.asarray(vals.to_numpy(zero_copy_only=False), dtype=np.int64)
-                Xl = flat_l[
-                    (offs[:-1][gidx, None] + np.arange(C.shape[1])[None, :]).astype(
-                        np.int64
-                    )
-                ]
-                ks, ds_, sxs, ns = [], [], [], []
-                for k in np.unique(cl[gidx]):
-                    rows = Xl[cl[gidx] == k]
-                    ks.extend([int(k)] * C.shape[1])
-                    ds_.extend(range(C.shape[1]))
-                    sxs.extend(rows.sum(axis=0, dtype=np.int64).tolist())
-                    ns.extend([rows.shape[0]] * C.shape[1])
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(ks, type=pa.int32()),
-                        pa.array(ds_, type=pa.int32()),
-                        pa.array(sxs, type=pa.int64()),
-                        pa.array(ns, type=pa.int64()),
-                    ],
-                    ["ivf_cluster", "__i", "__sx", "__n"],
-                )
-
-        return compute
 
     out_fields = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in qdf.schema
@@ -476,7 +479,7 @@ def build_ivf_index_exact(
 
     def assign(cents: list[list[float]]) -> DataFrame:
         return qdf.mapInArrow(
-            _assign_kernel(cents, with_stats=False),
+            _ivf_assign_kernel(cents, with_stats=False),
             schema=f"{out_fields}, ivf_cluster int",
         )
 
@@ -484,7 +487,7 @@ def build_ivf_index_exact(
         stats = (
             qdf.select("__qv")
             .mapInArrow(
-                _assign_kernel(cents, with_stats=True),
+                _ivf_assign_kernel(cents, with_stats=True),
                 schema="ivf_cluster int, __i int, __sx bigint, __n bigint",
             )
             .groupBy("ivf_cluster", "__i")

@@ -26,6 +26,11 @@ def get_spark(
       columnar-batched instead of row-pickled.
     - UTC session timezone: deterministic date/timestamp semantics and
       parity with external engines (the DuckDB correctness oracle).
+    - Codegen cache of 1024 classes: one pass over a workload's queries
+      compiles ~150 classes, more than Spark's default cache of 100 holds,
+      so re-running a query recompiled nearly all of them. The cache is
+      JVM-wide and static: it takes this size only if no session compiled
+      code in this JVM before.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -43,6 +48,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     return builder.getOrCreate()
 

@@ -167,34 +167,51 @@ def test_minhash_identical_docs_found(spark):
     assert pairs[0]["est_jaccard"] == 1.0
 
 
-def test_xxh64_np_matches_spark_every_short_length(spark):
-    """The NumPy XXH64 kernel behind the Arrow minhash path must be
-    bit-equal to Spark's xxhash64 for EVERY input length it can see
-    (0..31 bytes), including multi-byte UTF-8 — this is the contract that
-    lets the mapInArrow signature stage replace the JVM expression tree."""
+def _xxh64_np_vs_spark(spark, kernel, max_len: int, extra: tuple[str, ...]) -> None:
+    """Hash 4 random byte strings of every length 0..max_len plus `extra`
+    (UTF-8) with the NumPy `kernel` and with Spark's xxhash64; assert
+    bit-equality on every one."""
     import numpy as np
-
-    from ml_data_pipeline_spark.functions.xxh64_np import xxh64_short
 
     rng = np.random.default_rng(16)
     samples: list[bytes] = []
-    for length in range(32):
+    for length in range(max_len + 1):
         for _ in range(4):
             samples.append(bytes(rng.integers(0, 256, length, dtype=np.uint8)))
-    for s in ("", "héllo", "日本語テスト", "ünïcodé!", "a" * 31, "é" * 10):
-        samples.append(s.encode("utf-8"))
+    samples.extend(s.encode("utf-8") for s in extra)
     maxlen = max(1, max(len(b) for b in samples))
     data = np.zeros((len(samples), maxlen), dtype=np.uint8)
     lens = np.zeros(len(samples), dtype=np.int64)
     for i, b in enumerate(samples):
         data[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
         lens[i] = len(b)
-    ours = xxh64_short(data, lens)
+    ours = kernel(data, lens)
     df = spark.createDataFrame(
         [(i, bytearray(b)) for i, b in enumerate(samples)], "i int, b binary"
     )
     theirs = {r["i"]: r["h"] for r in df.select("i", F.xxhash64("b").alias("h")).collect()}
-    assert all(int(ours[i]) == theirs[i] for i in range(len(samples)))
+    assert [int(h) for h in ours] == [theirs[i] for i in range(len(samples))]
+
+
+def test_xxh64_np_matches_spark_every_short_length(spark):
+    """The NumPy XXH64 kernel behind the Arrow minhash path must be
+    bit-equal to Spark's xxhash64 for EVERY input length it can see
+    (0..31 bytes), including multi-byte UTF-8 — this is the contract that
+    lets the mapInArrow signature stage replace the JVM expression tree."""
+    from ml_data_pipeline_spark.functions.xxh64_np import xxh64_short
+
+    _xxh64_np_vs_spark(
+        spark, xxh64_short, 31, ("", "héllo", "日本語テスト", "ünïcodé!", "a" * 31, "é" * 10)
+    )
+
+
+def test_xxh64_np_general_matches_spark_lengths_0_to_100(spark):
+    """The general-length kernel behind the Arrow simhash path: lengths
+    0..100 cover the short path and 1, 2 and 3 full 32-byte stripes, each
+    with every 8/4/1-byte tail, plus multi-byte UTF-8 across a stripe."""
+    from ml_data_pipeline_spark.functions.xxh64_np import xxh64
+
+    _xxh64_np_vs_spark(spark, xxh64, 100, ("é" * 16, "日本語" * 6, "ü" * 50, "x" * 64))
 
 
 def test_minhash_arrow_path_equals_jvm_expressions(spark):
@@ -250,6 +267,9 @@ def test_simhash_per_tok_arrow_equals_jvm(spark):
             (6, "  lead trail  "),
             (7, "TAB\tand\x0bvtab\nnl"),
             (8, ("tok " * 200).strip()),
+            # tokens of 32+ bytes take the XXH64 stripe branch (1 and 2 stripes)
+            (9, "supercalifragilisticexpialidocious_40bytes " + "ä" * 40 + " x" * 3),
+            (10, "Supercalifragilisticexpialidocious_40b_" * 2),
         ],
         "doc_id long, text string",
     )

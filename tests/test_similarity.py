@@ -397,3 +397,24 @@ def test_r13_ivf_exact_twin_recall_floor(spark):
     }
     recall = len(exact & approx) / 10.0
     assert recall >= 0.3, f"exact-twin IVF recall@10 collapsed to {recall}"
+
+
+def test_ivf_assign_kernel_sliced_batch_equals_fresh_batch():
+    """Arrow's list `values` ignore a slice, so a sliced batch carries
+    element entries past its last row. Rows assigned from a sliced batch
+    must equal the same rows built as a fresh batch: a NULL element makes
+    its own row's cluster NULL and no other row's."""
+    import pyarrow as pa
+
+    qv = pa.array([[1, 2], [None, 3], [40, 50], [6, 7]], pa.list_(pa.int64()))
+    full = pa.RecordBatch.from_arrays([pa.array([0, 1, 2, 3], pa.int64()), qv], ["id", "__qv"])
+    sliced = full.slice(1, 2)
+    fresh = pa.RecordBatch.from_pylist(sliced.to_pylist(), schema=full.schema)
+    assert sliced.column(1).offset == 1  # a real slice, not a copy
+    cents = [[0.0, 0.0], [45.0, 45.0]]
+    for with_stats in (False, True):
+        kernel = SS._ivf_assign_kernel(cents, with_stats)
+        got = [b.to_pylist() for b in kernel([sliced])]
+        assert got == [b.to_pylist() for b in kernel([fresh])]
+    rows = next(SS._ivf_assign_kernel(cents, False)([sliced])).to_pylist()
+    assert [(r["id"], r["ivf_cluster"]) for r in rows] == [(1, None), (2, 1)]
