@@ -95,15 +95,26 @@ def cross_val_scores(
             )
     else:
         folded = add_fold_column(df, n_folds, target if stratified else None, seed).cache()
-    # overlap independent fold fits from driver threads (r16, guide §2.6):
-    # actions are only sequential because the driver calls them
-    # sequentially — fold k+1's jobs back-fill executor slots freed by
-    # fold k's stragglers. Results are keyed by fold index so the score
-    # list (and therefore mean/std and every hash-pinned trial table) is
-    # order-identical to the sequential loop; each fit is deterministic
-    # on the same cached fold data. Cache is materialized BEFORE the pool
-    # so concurrent cold scans cannot compute the fold frame twice.
+    # materialized BEFORE the fold pool so concurrent cold scans cannot
+    # compute the fold frame twice
     folded.count()
+    cv = _fold_scores(folded, target, model_type, params, n_folds, metric, task)
+    folded.unpersist()
+    return cv
+
+
+def _fold_scores(
+    folded: DataFrame,
+    target: str,
+    model_type: str,
+    params: dict[str, Any] | None,
+    n_folds: int,
+    metric: str,
+    task: str,
+) -> dict[str, Any]:
+    """Score every fold of ``folded``: a frame whose ``__fold`` column holds
+    integers in [0, n_folds), already cached and materialized by the caller,
+    which also unpersists it. Concurrent callers can share one such frame."""
 
     def _one_fold(k: int) -> float:
         train = folded.where(F.col("__fold") != k).drop("__fold")
@@ -111,11 +122,17 @@ def cross_val_scores(
         _, metrics = train_and_evaluate(train, test, target, model_type, params, task=task)
         return metrics[metric]
 
+    # overlap independent fold fits from driver threads (r16, guide §2.6):
+    # actions are only sequential because the driver calls them
+    # sequentially — fold k+1's jobs back-fill executor slots freed by
+    # fold k's stragglers. Results are keyed by fold index so the score
+    # list (and therefore mean/std and every hash-pinned trial table) is
+    # order-identical to the sequential loop; each fit is deterministic
+    # on the same cached fold data.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=min(n_folds, 3)) as pool:
         scores = list(pool.map(_one_fold, range(n_folds)))
-    folded.unpersist()
     n = len(scores)
     mean = sum(scores) / n
     var = sum((s - mean) ** 2 for s in scores) / n
@@ -180,10 +197,11 @@ def random_search(
     folded.count()  # materialize before concurrent trials share it
 
     def _one_trial(t: int) -> dict[str, Any]:
-        cv = cross_val_scores(
-            folded, target, model_type, all_params[t],
-            n_folds=n_folds, metric=metric, seed=seed, fold_col="__fold",
-        )
+        # straight to the fold loop: cross_val_scores would re-cache this
+        # frame per trial, and Spark keeps ONE cache entry per plan, so the
+        # first trial to finish dropped it under the others; the fold range
+        # needs no probe either (add_fold_column builds it in range)
+        cv = _fold_scores(folded, target, model_type, all_params[t], n_folds, metric, task)
         return {"trial": t, "params": all_params[t], "mean": cv["mean"], "std": cv["std"]}
 
     from concurrent.futures import ThreadPoolExecutor

@@ -84,6 +84,45 @@ def test_random_search_returns_best(reg_df):
     assert "numTrees" in res["best"]["params"]
 
 
+def test_random_search_trials_share_one_fold_cache(reg_df, monkeypatch):
+    """Concurrent trials read the one fold frame random_search cached. They
+    used to re-cache it inside cross_val_scores; Spark keeps one cache entry
+    per plan, so the first trial to finish unpersisted it while the others
+    still fitted. Now nothing is unpersisted before the last fit, and the
+    trial table equals scoring each trial alone on the same folds."""
+    frame = type(reg_df)  # the concrete DataFrame class that defines unpersist
+    events = []
+    fit, unpersist = MT.train_and_evaluate, frame.unpersist
+
+    def logged_fit(*a, **k):
+        events.append("fit")
+        return fit(*a, **k)
+
+    def logged_unpersist(self, *a, **k):
+        events.append("unpersist")
+        return unpersist(self, *a, **k)
+
+    monkeypatch.setattr(MT, "train_and_evaluate", logged_fit)
+    monkeypatch.setattr(frame, "unpersist", logged_unpersist)
+    res = MT.random_search(
+        reg_df, "tgt", "linear_regression",
+        space={"regParam": [0.0, 0.1, 1.0]}, n_trials=3, n_folds=2, metric="r2",
+    )
+    monkeypatch.undo()
+    assert events.count("fit") == 6
+    assert events[6:] == ["unpersist"]
+
+    folded = MT.add_fold_column(reg_df, 2, None, seed=42)
+    for rec in res["trials"]:
+        cv = MT.cross_val_scores(
+            folded, "tgt", "linear_regression", rec["params"],
+            n_folds=2, metric="r2", fold_col="__fold",
+        )
+        assert (rec["mean"], rec["std"]) == (
+            pytest.approx(cv["mean"], rel=1e-9), pytest.approx(cv["std"], rel=1e-9, abs=1e-12)
+        )
+
+
 def test_tpe_propose_concentrates_near_optimum():
     """Driver-side TPE math, no Spark: with a history scored by a known
     quadratic (optimum x=0.3), proposals after startup should concentrate
