@@ -453,9 +453,10 @@ def minhash_near_duplicates(
             # sides) are pure overhead — the bucket is only an equality
             # key, and equal slots hash equal either way. Pair output
             # verified identical at sf0.001/0.01/0.1
-            # (tools/probe_band_key.py); collisions ADD candidates (never
-            # drop them) and the est_jaccard >= threshold verify filters
-            # them exactly as it filters same-band non-duplicates.
+            # (OPTIMIZATION_r15.md, "Changes taken" item 7); collisions
+            # ADD candidates (never drop them) and the est_jaccard >=
+            # threshold verify filters them exactly as it filters
+            # same-band non-duplicates.
             return F.xxhash64(*[F.element_at("signature", b * r + j + 1) for j in range(r)])
         # md5 twin path: the bucket stays the plain slot-concat STRING so
         # the DuckDB oracle can replay it verbatim

@@ -93,10 +93,10 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     # [a-zA-Z0-9_] (no UNICODE_CHARACTER_CLASS), so length(translate(t,
     # <word+ws chars>, '')) IS the [^\w \t\n\x0B\f\r] match count, and
     # length minus length(translate(t, digits, '')) IS the [0-9] count —
-    # verified equal on every corpus row (tools/probe_tx_quality.py)
-    # and pinned by the oracle hash. Locally ~wash (the projection is
-    # already spread); at scale it removes two regex passes per
-    # document.
+    # verified equal on every corpus row (OPTIMIZATION_r15.md, "Changes
+    # taken" item 6) and pinned by the oracle hash. Locally ~wash (the
+    # projection is already spread); at scale it removes two regex passes
+    # per document.
     _word_ws = (
         "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ0123456789_"
         " \t\n\x0b\f\r"

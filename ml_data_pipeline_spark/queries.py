@@ -5037,12 +5037,10 @@ def m42_qini(spark: SparkSession, sf: str) -> DataFrame:
     return C.qini_curve(frame, "treat", "score", "converted", "uid", n_bins=10)
 
 
+# Registration order only: the correctness-gate order is computed in
+# __spark_entry__.queries().
 ALL_QUERIES = {
-    # ---- round-2 ordering: the driver's correctness gate evaluates entries
-    # in dict order (first 50 in round 1) — queries WITHOUT a green
-    # CORRECTNESS_r01 row lead, round-1-verified queries follow. Rotate
-    # again next round until every entry has a driver row on record.
-    # -- oracle-checked, driver-unverified in r1
+    # -- oracle-checked
     "e12_count_min": e12_count_min,
     "e16_to_numeric": e16_to_numeric,
     "e11_universal_hash": e11_universal_hash,
@@ -5130,8 +5128,8 @@ ALL_QUERIES = {
     "m4_feature_importances": m4_feature_importances,
     "m5_cross_val": m5_cross_val,
     "m12_single_row_inference": m12_single_row_inference,
-    # -- rows-only, bench-exercised every round (weakest marginal gate
-    # value; xxhash64 headliners whose full logic the md5 twins replay)
+    # -- rows-only (xxhash64 headliners whose full logic the md5 twins
+    # replay)
     "dd_minhash_pairs": dd_minhash_pairs,
     "dd_simhash_pairs": dd_simhash_pairs,
     # -- oracle-backed (ss_ivf_topk graduated r12: engine-exact
@@ -5139,7 +5137,7 @@ ALL_QUERIES = {
     "ss_ann_topk": ss_ann_topk,
     "ss_ivf_topk": ss_ivf_topk,
     "ss_cosine_pairs": ss_cosine_pairs,
-    # -- green driver rows in CORRECTNESS_r01
+    # -- round-1 gates
     "q1_pricing_summary": q1_pricing_summary,
     "q3_shipping_priority": q3_shipping_priority,
     "q5_region_revenue": q5_region_revenue,
@@ -5190,7 +5188,7 @@ ALL_QUERIES = {
     "e8_feature_hash": e8_feature_hash,
     "e9_onehot_hash": e9_onehot_hash,
     "e10_embedding_hash": e10_embedding_hash,
-    # -- round-2 late additions (never driver-verified; rotate forward in r3)
+    # -- round-2 late additions
     "q6_forecast_revenue": q6_forecast_revenue,
     "q14_promo_share": q14_promo_share,
     "q18_large_orders": q18_large_orders,
@@ -5352,373 +5350,8 @@ ALL_QUERIES = {
     "m42_qini": m42_qini,
 }
 
-# ---- ROUND-4 ROTATION TODO (for the next round's builder): the driver
-# records rows for the FIRST 50 dict entries. After CORRECTNESS_r03 lands,
-# rebuild the priority list as: (1) any r3-priority entry WITHOUT a green
-# r03 row (the overflow past position 50), then (2) the ~42 oracle-backed
-# gates added late in r3 (tx_bpe_pairs .. q_max_concurrency — everything
-# registered after the _R3_PRIORITY block below), then (3) the 15
-# rows-only entries. Keep already-green r1/r2/r3 entries at the back.
-# ---- round-3 rotation (VERDICT r2, next-round item 2): the driver records a
-# CORRECTNESS row for the FIRST 50 dict entries only. 70 registered queries
-# still have no driver row after r1+r2; 55 of them are oracle-backed. Lead
-# with those 55 — the six r2-verdict-critical gates (the fixed m19_roc_points
-# plus the five queries that just gained DuckDB oracles) first — so
-# CORRECTNESS_r03 covers 50 of them hash-level; the 5 overflow + 15
-# rows-only unverified queue directly behind for the final r4 rotation.
-# Already-green r1/r2 entries keep their relative order at the back.
-_R3_PRIORITY = [
-    # r2-verdict items 1 & 3: fixed crash + newly-oracled rows-only queries
-    "m19_roc_points",
-    "m18_roc_auc",
-    "tx_line_dedup",
-    "tx_unigram_logprob",
-    "q12_priority_by_status",
-    "q19_disjunctive_revenue",
-    "s16_scd2",
-    # oracle-backed, never driver-verified (r1 back-half block)
-    "q_window_suite",
-    "q_grouping_sets",
-    "pipe_clean_corpus",
-    "q_salted_join",
-    "q_not_exists",
-    "q_correlated_scalar",
-    "tx_pack_sequences",
-    "tx_mixture_plan",
-    "m15_grouped_ols",
-    "q_attribution",
-    "tx_chunk_documents",
-    "p16_grouped_percentiles",
-    "q_exists_semi",
-    "tx_top_ngrams",
-    "p17_outliers",
-    "s_diff_versions",
-    "tx_lang_stats",
-    "q_null_safe_join",
-    "ss_brute_topk",
-    "ss_brute_pairs",
-    # oracle-backed, never driver-verified (r2 late additions)
-    "q6_forecast_revenue",
-    "q14_promo_share",
-    "q18_large_orders",
-    "q_resample_gapfill",
-    "tx_contamination",
-    "tx_boilerplate",
-    "tx_tfidf",
-    "t9_stratified_sample",
-    "e18_bucketize",
-    "p18_key_skew",
-    "tx_c4_filters",
-    "tx_domain_stats",
-    "q_range_frame",
-    "m16_lift_table",
-    "q_funnel",
-    "q_cohort_retention",
-    "p19_psi_drift",
-    "p20_expectations",
-    "s15_incremental_rollup",
-    "q_fuzzy_pairs",
-    "q_event_transitions",
-    "q_seasonal_anomaly",
-    "ss_label_centroids",
-    "pipe_entity_resolution",
-    "m17_calibration",
-    "p21_mad_outliers",
-    "p22_chi2_mi",
-    "e19_winsorize",
-    "q10_returned_revenue",
-    # round-3 new oracle-backed gates (queue for the r4 driver window)
-    "q_bm25",
-    "p24_spearman",
-    "e20_robust_scale",
-    "m20_group_ttest",
-    "q_interval_join",
-    "f9_align_columns",
-    "s3_csv_strings",
-    "p25_approx_distinct_quality",
-    "q_ewma",
-    "m21_pr_points",
-    "m22_brier_logloss",
-    "st_enriched_segments",
-    "p23_ks_drift",  # oracle added r3 (was rows-only with no structural reason)
-    # rows-only, never driver-verified (weaker check; after the oracle block)
-    "i8_impute_em",
-    "b8_smote_tomek",
-    "b9_smote_enn",
-    "tx_fingerprint",
-    "m3_eval_classification",
-    "m4_feature_importances",
-    "m5_cross_val",
-    "m12_single_row_inference",
-    "dd_minhash_pairs",
-    "dd_simhash_pairs",
-    "ss_ann_topk",
-    "ss_ivf_topk",
-    "ss_cosine_pairs",
-    "ss_semantic_dedup",
-]
-ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _R3_PRIORITY},
-    **{n: f for n, f in ALL_QUERIES.items() if n not in set(_R3_PRIORITY)},
-}
-
-# ---- round-4 rotation (VERDICT r3, next-round item 3): q12 (the one r3 red
-# row — oracle type fixed, engine already verified correct) leads, then the
-# oracle-backed never-driver-verified queue in registry order. The driver
-# records rows for the FIRST 50 dict entries; entries already green in
-# r1/r2/r3 keep their relative order at the back. After CORRECTNESS_r04,
-# the r5 rotation is: remaining oracle-backed unverified (62), then the 15
-# rows-only entries, then any round-4 additions.
-_R4_PRIORITY = [
-    # r3 red row first: oracle now CASTs to BIGINT (VERDICT r3 item 1)
-    "q12_priority_by_status",
-    # oracle-backed, never driver-verified (registry order; q_max_concurrency
-    # pulled forward because its oracle also gained the BIGINT cast)
-    "pipe_entity_resolution",
-    "m17_calibration",
-    "p21_mad_outliers",
-    "p22_chi2_mi",
-    "e19_winsorize",
-    "q10_returned_revenue",
-    "q_bm25",
-    "p24_spearman",
-    "e20_robust_scale",
-    "m20_group_ttest",
-    "q_interval_join",
-    "f9_align_columns",
-    "s3_csv_strings",
-    "p25_approx_distinct_quality",
-    "q_ewma",
-    "m21_pr_points",
-    "m22_brier_logloss",
-    "st_enriched_segments",
-    "p23_ks_drift",
-    "q_sql_surface",
-    "t10_group_sample",
-    "e21_group_scale",
-    "q_recency_features",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_profit_by_nation",
-    "q13_order_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_qty_revenue",
-    "q22_dormant_customers",
-    "m24_confusion_matrix",
-    "m25_regression_metrics",
-    "tx_url_canonicalize",
-    "tx_blocklist_filter",
-    "tx_script_stats",
-    "s17_zorder_layout",
-    "dd_incremental_pairs",
-    "t11_weighted_sample",
-    "pipe_web_hygiene",
-    "e22_woe_encode",
-    "p26_k_anonymity",
-    "p27_benford",
-    "q_twap",
-    "e23_information_value",
-    "q_gini",
-    "q_rfm_segments",
-    "q_basket_lift",
-    "q_max_concurrency",
-    # --- driver window ends here (50 entries above) ---
-    # remaining oracle-backed unverified (r5 rotation queue)
-    "q_abc_brands",
-    "s18_schema_diff",
-    "tx_temperature_mix",
-    "t12_group_weighted_sample",
-    "tx_vocab_overlap",
-    "p28_moments",
-    "tx_span_dedup",
-    "tx_dsir_select",
-    "q_pagerank",
-    "ss_random_project",
-    "ml_pca_contract",
-    "tx_bpe_pairs",
-    "t13_negative_sample",
-    "s19_compaction_plan",
-    "st_sliding_topk",
-    "q_bloom_prejoin",
-    "q_triangles",
-    "e22_loo_target_encode",
-    "t14_cluster_safe_split",
-    "m23_ridge_path",
-    "q_churn_labels",
-    "pipe_golden_record",
-    "m24_conformal",
-    "m25_ndcg",
-    "tx_bpe_apply",
-    "m26_classification_report",
-    "q_rolling_corr",
-    "m27_sliced_report",
-    "s20_content_hash",
-    "tx_zipf_slope",
-    "tx_diversity",
-    "q_attribution_models",
-    "p29_l_diversity",
-    "p30_dp_counts",
-    "q_join_cardinality",
-    "ml_kmeans",
-    "q_event_patterns",
-    "m29_time_series_cv",
-    "s21_bin_manifest",
-    "tx_pmi_collocations",
-    "tx_vocab_coverage",
-    "q_hierarchy_flatten",
-    "t16_quota_allocation",
-    "q_time_to_convert",
-    "dd_prefix_jaccard",
-    "s22_range_boundaries",
-    "p33_weighted_median",
-    "q_active_users",
-    "p34_ref_integrity",
-    "q_revenue_bridge",
-    "m30_kaplan_meier",
-    "ml_silhouette",
-    "m31_nmi",
-    "m32_ari",
-    "ml_davies_bouldin",
-    "pipe_training_frame",
-    "m33_best_split",
-    "m34_best_f1",
-    "tx_novelty",
-    "m35_pair_confusion",
-    "p35_null_patterns",
-    "q_skyline",
-    # rows-only, never driver-verified (weaker check; r5/r6 queue)
-    "i8_impute_em",
-    "b8_smote_tomek",
-    "b9_smote_enn",
-    "tx_fingerprint",
-    "m3_eval_classification",
-    "m4_feature_importances",
-    "m5_cross_val",
-    "m12_single_row_inference",
-    "dd_minhash_pairs",
-    "dd_simhash_pairs",
-    "ss_ann_topk",
-    "ss_ivf_topk",
-    "ss_cosine_pairs",
-    "ss_semantic_dedup",
-    "m23_isotonic_calibration",
-]
-ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _R4_PRIORITY},
-    **{n: f for n, f in ALL_QUERIES.items() if n not in set(_R4_PRIORITY)},
-}
-
-# ---- round-5 rotation (VERDICT r3 item 3 continuation): CORRECTNESS_r04 is
-# 50/50 green (q12 recovered), leaving 73 oracle-backed + 15 rows-only
-# queries with no driver row. The driver records rows for the FIRST 50 dict
-# entries, so the r5 window takes the first 50 of the oracle-backed queue in
-# registry order; the remaining 23 oracle-backed + the 15 rows-only entries
-# queue directly behind for r6 (38 slots), which also absorbs any round-5
-# additions. Already-green entries keep their relative order at the back.
-_R5_PRIORITY = [
-    # oracle-backed, never driver-verified — r5 driver window (50)
-    "q_abc_brands",
-    "s18_schema_diff",
-    "tx_temperature_mix",
-    "t12_group_weighted_sample",
-    "tx_vocab_overlap",
-    "p28_moments",
-    "tx_span_dedup",
-    "tx_dsir_select",
-    "q_pagerank",
-    "ss_random_project",
-    "ml_pca_contract",
-    "tx_bpe_pairs",
-    "t13_negative_sample",
-    "s19_compaction_plan",
-    "st_sliding_topk",
-    "q_bloom_prejoin",
-    "q_triangles",
-    "e22_loo_target_encode",
-    "t14_cluster_safe_split",
-    "m23_ridge_path",
-    "q_churn_labels",
-    "pipe_golden_record",
-    "m24_conformal",
-    "m25_ndcg",
-    "tx_bpe_apply",
-    "m26_classification_report",
-    "q_rolling_corr",
-    "m27_sliced_report",
-    "s20_content_hash",
-    "tx_zipf_slope",
-    "tx_diversity",
-    "q_attribution_models",
-    "p29_l_diversity",
-    "p30_dp_counts",
-    "q_join_cardinality",
-    "ml_kmeans",
-    "q_event_patterns",
-    "m29_time_series_cv",
-    "s21_bin_manifest",
-    "tx_pmi_collocations",
-    "tx_vocab_coverage",
-    "q_hierarchy_flatten",
-    "t16_quota_allocation",
-    "q_time_to_convert",
-    "dd_prefix_jaccard",
-    "s22_range_boundaries",
-    "p33_weighted_median",
-    "q_active_users",
-    "p34_ref_integrity",
-    "q_revenue_bridge",
-    # --- driver window ends here (50 entries above) ---
-    # remaining oracle-backed unverified (r6 queue)
-    "m30_kaplan_meier",
-    "ml_silhouette",
-    "m31_nmi",
-    "m32_ari",
-    "ml_davies_bouldin",
-    "pipe_training_frame",
-    "m33_best_split",
-    "m34_best_f1",
-    "tx_novelty",
-    "m35_pair_confusion",
-    "p35_null_patterns",
-    "q_skyline",
-    "q_cusum_changepoint",
-    "m36_trend",
-    "e24_quantile_transform",
-    "dd_containment",
-    "m37_krippendorff",
-    "m38_bootstrap_ci",
-    "m39_nelson_aalen",
-    "q_rank_fusion",
-    "m40_psm_att",
-    "m41_did",
-    "m42_qini",
-    # rows-only, never driver-verified (weaker check; r6 queue tail)
-    "i8_impute_em",
-    "b8_smote_tomek",
-    "b9_smote_enn",
-    "tx_fingerprint",
-    "m3_eval_classification",
-    "m4_feature_importances",
-    "m5_cross_val",
-    "m12_single_row_inference",
-    "dd_minhash_pairs",
-    "dd_simhash_pairs",
-    "ss_ann_topk",
-    "ss_ivf_topk",
-    "ss_cosine_pairs",
-    "ss_semantic_dedup",
-    "m23_isotonic_calibration",  # r5: gained an exact-PAV oracle (no longer rows-only)
-]
-ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _R5_PRIORITY},
-    **{n: f for n, f in ALL_QUERIES.items() if n not in set(_R5_PRIORITY)},
-}
 
 # ---------------------------------------------------------------- round-5 gates
-# New capability rows added in round 5; they register at the BACK of the dict
-# (no driver row this round) and the r6 rotation must pull them into the
-# window together with the 23 + 15 queue above.
 
 def p36_cramers_v(spark: SparkSession, sf: str) -> DataFrame:
     """Cramér's V effect size between order priority and status
@@ -6014,18 +5647,6 @@ ALL_QUERIES.update(
     }
 )
 
-# ---- ROUND-6 ROTATION TODO (for the next round's builder): after
-# CORRECTNESS_r05 lands (the 50-entry window above), 51 queries remain
-# unverified: the 23 oracle-backed in the _R5_PRIORITY r6-queue block, the
-# 15 rows-only entries behind them, and the 13 round-5 additions registered
-# at the BACK of the dict (p36_cramers_v, m43_cohens_kappa, q_acf,
-# q_adamic_adar, tx_bigram_lm, ss_scalar_quantize, q_semi_additive,
-# m44_logrank, m45_mannwhitney, m46_cuped, s24_partitioned_write,
-# s25_bucketed_join, ml_dbscan). Build _R6_PRIORITY as: the 23
-# oracle-backed, then the 13 r5 additions (oracle-backed), then the 15
-# rows-only — 50 fill the window, 1 overflows to r7 with any r6
-# additions.
-
 
 def ml_dbscan(spark: SparkSession, sf: str) -> DataFrame:
     """DBSCAN over the embeddings table (ml.clustering.dbscan_labels):
@@ -6147,79 +5768,7 @@ def ml_dbscan_ivf(spark: SparkSession, sf: str) -> DataFrame:
 ALL_QUERIES.update({"ml_dbscan_ivf": ml_dbscan_ivf})
 
 
-# ------------------------------------------------------------ round-6 rotation
-# Executes the r5 TODO above exactly: the driver records rows for the FIRST
-# 50 dict entries, so the window takes (1) the 23 oracle-backed entries from
-# the r6 queue, (2) the 13 round-5 additions (all oracle-backed), (3)
-# m23_isotonic_calibration (gained an exact-PAV oracle in r5 — promoted
-# ahead of the rows-only tail), then (4) the rows-only entries in queue
-# order; 37 + 13 = 50 fill the window and the last rows-only entry
-# (ss_semantic_dedup) overflows to r7 together with any round-6 additions.
-_R6_PRIORITY = [
-    # (1) oracle-backed, never driver-verified — r6 queue carried from r5
-    "m30_kaplan_meier",
-    "ml_silhouette",
-    "m31_nmi",
-    "m32_ari",
-    "ml_davies_bouldin",
-    "pipe_training_frame",
-    "m33_best_split",
-    "m34_best_f1",
-    "tx_novelty",
-    "m35_pair_confusion",
-    "p35_null_patterns",
-    "q_skyline",
-    "q_cusum_changepoint",
-    "m36_trend",
-    "e24_quantile_transform",
-    "dd_containment",
-    "m37_krippendorff",
-    "m38_bootstrap_ci",
-    "m39_nelson_aalen",
-    "q_rank_fusion",
-    "m40_psm_att",
-    "m41_did",
-    "m42_qini",
-    # (2) round-5 additions, oracle-backed, registered after the r5 window
-    "p36_cramers_v",
-    "m43_cohens_kappa",
-    "q_acf",
-    "q_adamic_adar",
-    "tx_bigram_lm",
-    "ss_scalar_quantize",
-    "q_semi_additive",
-    "m44_logrank",
-    "m45_mannwhitney",
-    "m46_cuped",
-    "s24_partitioned_write",
-    "s25_bucketed_join",
-    "ml_dbscan",
-    # (3) promoted: rows-only in r4, exact-PAV oracle since r5
-    "m23_isotonic_calibration",
-    # (4) rows-only, never driver-verified (weaker rows-only check)
-    "i8_impute_em",
-    "b8_smote_tomek",
-    "b9_smote_enn",
-    "tx_fingerprint",
-    "m3_eval_classification",
-    "m4_feature_importances",
-    "m5_cross_val",
-    "m12_single_row_inference",
-    "dd_minhash_pairs",
-    "dd_simhash_pairs",
-    "ss_ann_topk",
-    "ss_ivf_topk",
-    "ss_cosine_pairs",
-    # --- driver window ends here (50 entries above) ---
-    "ss_semantic_dedup",  # overflows to the r7 window
-]
-ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _R6_PRIORITY},
-    **{n: f for n, f in ALL_QUERIES.items() if n not in set(_R6_PRIORITY)},
-}
-
-# Round-6 addition: the single-sort baseline gate (registered after the
-# _R6_PRIORITY reorder — lands behind the window; r7 rotation material).
+# Round-6 addition: the single-sort baseline gate.
 ALL_QUERIES.update({"i4_interpolate_single": i4_interpolate_single})
 
 
@@ -6709,90 +6258,6 @@ ALL_QUERIES.update(
 )
 
 
-# ------------------------------------------------------------ round-8 rotation
-# The driver records rows for the FIRST 50 dict entries. Round 7 never
-# advanced the window (CORRECTNESS_r07 re-ran the r6 names — VERDICT r7
-# item 2), so this window takes, in order: (1) the 4 queries with NO
-# driver row ever (ss_semantic_dedup + i4_interpolate_single, asked for
-# two rounds running, plus the two round-8 additions), (2) the 9 gates
-# whose implementation changed in round 7 (judge-verified locally; the
-# driver record should own them), (3) the 19 gates whose implementation
-# changed THIS round (i4 split-point rewrite, MICE estimator refactor,
-# cache/checkpoint rescan drains), then (4) the longest-unverified tail —
-# 18 of the 50 queries whose only driver row is from round 1.
-_R8_PRIORITY = [
-    # (1) never driver-verified
-    "ss_semantic_dedup",
-    "i4_interpolate_single",
-    "dd_incremental_indexed",
-    "i6_mice_rf",
-    # (1b) round-8 sink/ML gates — the 17 previously pytest-only SURVEY
-    # components (F10-F12, E17, M1, S7, S9/T6, S10-S12, S14, M7, M10, M11,
-    # M13, B10); these displace 13 round-1-verified tail entries, which
-    # already hold green driver rows
-    "f10_dtype_align",
-    "f11_header_strip",
-    "e17_label_round",
-    "f12_feature_projection",
-    "m1_scaler_stats",
-    "s7_paired_sink",
-    "s9_version_lineage",
-    "s12_description_sidecar",
-    "m11_model_roundtrip",
-    "m13_scorer_suite",
-    "b10_bagging_floor",
-    "m10_importance_roundtrip",
-    "m7_tpe_trials",
-    # (2) round-7-modified (n-gram dedup rewrite + de-hinted call sites)
-    "dd_ngram_jaccard",
-    "dd_incremental_pairs",
-    "dd_containment",
-    "dd_components",
-    "dd_keep_canonical",
-    "s16_scd2",
-    "pipe_entity_resolution",
-    "q17_small_qty_revenue",
-    "q_bloom_prejoin",
-    # (3) round-8-modified
-    "i4_interpolate",
-    "i4_interpolate_ranged",
-    "i6_impute_mice",
-    "i5_impute_knn",
-    "i7_hot_deck",
-    "m24_conformal",
-    "p21_mad_outliers",
-    "p19_psi_drift",
-    "ss_ann_topk",
-    "ss_ivf_topk",
-    "p24_spearman",
-    "tx_contamination",
-    "tx_boilerplate",
-    "tx_tfidf",
-    "tx_fingerprint",
-    "tx_span_dedup",
-    "tx_bpe_apply",
-    "m29_time_series_cv",
-    "e22_loo_target_encode",
-    # (4) longest-unverified (round-1 rows only), registry order; the 13
-    # displaced names (q_events_hourly .. p1_shape_census) move to the
-    # round-9 rotation TODO below
-    "p37_hll_shard_merge",
-    "st_stream_dedup",
-    "st_stateful_running",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    # --- driver window ends here (50 entries above) ---
-]
-assert len(_R8_PRIORITY) == 50 and len(set(_R8_PRIORITY)) == 50
-ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _R8_PRIORITY},
-    **{n: f for n, f in ALL_QUERIES.items() if n not in set(_R8_PRIORITY)},
-}
-
-# (The round-9 rotation TODO that lived here was implemented: see
-# _R9_PRIORITY at the end of this module, which supersedes this ordering.)
-
-
 # ------------------------------------------------------------ round-9 additions
 
 def m10_linear_shap(spark: SparkSession, sf: str) -> DataFrame:
@@ -7021,641 +6486,3 @@ def dd_incremental_append(spark: SparkSession, sf: str) -> DataFrame:
 
 
 ALL_QUERIES.update({"dd_incremental_append": dd_incremental_append})
-
-
-
-# ------------------------------------------------------------ round-9 rotation
-# The driver records rows for the FIRST 50 dict entries. This window takes,
-# in order: (1) the 2 round-9 additions (no driver row ever), (2) the 16
-# gates whose implementing modules changed THIS round (dedup.py manifest +
-# under-split probe → dd_*; streaming staging + run_to_memory drain →
-# st_*; tracked-cache conversions → i5/i7/i8, p21, p24, tx_fingerprint,
-# ss_semantic_dedup), (3) the 4 gates the r8 verdict named as
-# r8-modified-but-unwindowed (tx_quality, q_sessionize, e3_target_encode,
-# pipe_training_frame), (4) the full p* family over the r8-reworked
-# profiling.py (all still holding r1 rows), then (5) the longest-unverified
-# r1 tail (q5, window/temporal/JSON gates, s13, t7). Shares 14 names with
-# _R8_PRIORITY — exactly the ones r9 re-modified; the other 36 rotate in.
-_R9_PRIORITY = [
-    # (1) round-9 additions
-    "m10_linear_shap",
-    "m14_soft_cancel",
-    # (2) round-9-modified modules
-    "dd_incremental_indexed",
-    "dd_incremental_pairs",
-    "dd_ngram_jaccard",
-    "dd_minhash_pairs",
-    "dd_simhash_pairs",
-    "dd_containment",
-    "st_hourly_counts",
-    "st_stream_dedup",
-    "st_stateful_running",
-    "st_stream_join",
-    "dd_incremental_append",
-    "i5_impute_knn",
-    "i7_hot_deck",
-    "i8_impute_em",
-    "p21_mad_outliers",
-    "p24_spearman",
-    "tx_fingerprint",
-    "ss_semantic_dedup",
-    # (3) r8-modified, never re-greened by the driver (VERDICT r8 item 1)
-    "tx_quality",
-    "q_sessionize",
-    "e3_target_encode",
-    "pipe_training_frame",
-    # (4) the p* family over the r8-reworked profiling.py (r1 rows)
-    "p1_shape_census",
-    "p2_missing_counts",
-    "p3_total_missing",
-    "p4_distinct_counts",
-    "p5_type_classification",
-    "p6_value_counts",
-    "p7_rare_values",
-    "p7_rare_summary",
-    "p8_class_distribution",
-    "p9_head_tail",
-    "p10_example_values",
-    "p11_column_range",
-    "p12_correlation",
-    "p13_histogram",
-    # (5) longest-unverified r1 tail
-    "q5_region_revenue",
-    "q_topk_per_group",
-    "q_events_hourly",
-    "q_asof_join",
-    "q_json_extract",
-    "q_pivot",
-    "q_unpivot",
-    "q_rollup",
-    "q_cube",
-    "q_having",
-    "q_moving_avg",
-    "q_sliding_window",
-    # --- driver window ends here (50 entries above; t7_target_candidates
-    # and s13_question_template rotated out to fit the round-9
-    # st_stream_join and dd_incremental_append additions) ---
-]
-assert len(_R9_PRIORITY) == 50 and len(set(_R9_PRIORITY)) == 50
-ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _R9_PRIORITY},
-    **{n: f for n, f in ALL_QUERIES.items() if n not in set(_R9_PRIORITY)},
-}
-
-# ------------------------------------------------------------ round-10 rotation
-# The driver records rows for the FIRST 50 dict entries. This window takes,
-# in order: (1) the 13 gates whose implementing code changed THIS round —
-# the two oracle-upgraded gates (tx_fingerprint per-doc class sizes,
-# ss_semantic_dedup list_dot_product twin at threshold 0.35), the
-# combinatorial-LSH simhash, the dup-guarded + hint-free stored-index
-# build/append pair, the partition-local-permutation importance gate, the
-# checkpointed b8/b9, the loosened m14, and the four st_* gates over the
-# liveness-gated _stream_stage — then (2) the 19 names holding r1 rows
-# since round 1 (the e*/f* families, q_set_ops, s13, t7), then (3) the 18
-# oldest r2 rows (balancing contracts b1-b7, e11-e16 scalars, i1/i2/i3/i9
-# imputers, m2/m6/m9). Zero overlap with _R9_PRIORITY beyond the
-# r10-modified re-greens, per the r9 verdict's rotation directive.
-_R10_PRIORITY = [
-    # (1) round-10-modified gates
-    "tx_fingerprint",
-    "ss_semantic_dedup",
-    "dd_simhash_pairs",
-    "dd_incremental_append",
-    "dd_incremental_indexed",
-    "m10_importance_roundtrip",
-    "b8_smote_tomek",
-    "b9_smote_enn",
-    "m14_soft_cancel",
-    "st_hourly_counts",
-    "st_stream_dedup",
-    "st_stateful_running",
-    "st_stream_join",
-    # (2) r1 rows, never re-verified by the driver since round 1
-    "e1_one_hot",
-    "e2_label_encode",
-    "e4_frequency_encode",
-    "e5_binary_encode",
-    "e6_date_features",
-    "e7_simple_hash",
-    "e8_feature_hash",
-    "e9_onehot_hash",
-    "e10_embedding_hash",
-    "f1_f2_drop_select_numeric",
-    "f3_range_filter",
-    "f5_in_list_filter",
-    "f6_null_partition",
-    "f7_drop_null_rows",
-    "f8_merge_interval",
-    "f13_exact_dedup",
-    "q_set_ops",
-    "s13_question_template",
-    "t7_target_candidates",
-    # (3) oldest r2 rows
-    "b1_smote_counts",
-    "b2_undersample_counts",
-    "b3_centroids_counts",
-    "b4_nearmiss_counts",
-    "b5_oversample_counts",
-    "b6_adasyn_counts",
-    "b7_borderline_counts",
-    "e11_universal_hash",
-    "e12_count_min",
-    "e14_clip_round",
-    "e16_to_numeric",
-    "i1_impute_mean",
-    "i2_impute_median",
-    "i3_impute_mode",
-    "i9_impute_by_model",
-    "m2_ols_coefficients",
-    "m6_random_search_trials",
-    "m9_learning_curve",
-    # --- driver window ends here (50 entries above) ---
-]
-assert len(_R10_PRIORITY) == 50 and len(set(_R10_PRIORITY)) == 50
-ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _R10_PRIORITY},
-    **{n: f for n, f in ALL_QUERIES.items() if n not in set(_R10_PRIORITY)},
-}
-
-# ------------------------------------------------------------ round-11 rotation
-# The driver records rows for the FIRST 50 dict entries. This window takes,
-# in order: (1) the 22 gates whose implementing code changed THIS round —
-# the two r11 oracle graduations (m12 normal-equation single-row inference,
-# ss_cosine_pairs LCG-plane replay), the two cleared plan-rescan gates
-# (e4, i9), the hint-free indexed re-probe, the clip-NaN / tuning-default /
-# csv-contract / balancer-guard fixes, the SIX kNN-family gates over
-# the adaptive-LSH knn_join rework (b1/b4/b6/b9/i5/i7), and the r11 oracle
-# graduations (ss_ann_topk, m5_cross_val, m3, m4), PLUS the 7 gates the
-# late gate/oracle-layer review batch modified (q_sessionize's
-# integer-microsecond gap compare — a semantic change; m21/m22 rebased on
-# the interpolated _AUC_BASE_SQL; s3/s24/s25/s12 on the per-(sf,pid)
-# staging tag) — then (2) the remaining names holding r2 rows (computed
-# from the union of CORRECTNESS_r01-r10: mm_*/s*/t*-roundtrips, the r2
-# tx_* pack, p15, ss_quantize_int8, pipe_prepare_corpus), then (3) the
-# oldest r3 rows (m18/m19, which the late batch ALSO modified).
-# Overlap with _R10_PRIORITY is exactly the deliberate re-greens of
-# r11-modified gates, per the r10 verdict's rotation directive.
-# Displaced to make room for the late-batch re-greens (all still green in
-# the r11 full local sweeps at sf0.01/sf0.001, union rows r2-r3):
-# tx_token_count, tx_bpe_count, mm_frame_plan, tx_line_dedup,
-# tx_unigram_logprob, q19_disjunctive_revenue, q_window_suite — they head
-# the r12 stale list below.
-_R11_PRIORITY = [
-    # (1) round-11-modified gates
-    "m12_single_row_inference",
-    "ss_cosine_pairs",
-    "e4_frequency_encode",
-    "i9_impute_by_model",
-    "dd_incremental_indexed",
-    "e14_clip_round",
-    "m6_random_search_trials",
-    "m9_learning_curve",
-    "m7_tpe_trials",
-    "s1_csv_roundtrip",
-    "b7_borderline_counts",
-    "b8_smote_tomek",
-    # r11 adaptive-LSH knn_join rework: every kNN-family gate re-records
-    # (r11 review — the round's largest behavioral change must not keep
-    # stale driver rows)
-    "b1_smote_counts",
-    "b4_nearmiss_counts",
-    "b6_adasyn_counts",
-    "b9_smote_enn",
-    "i5_impute_knn",
-    "i7_hot_deck",
-    "ss_ann_topk",
-    "m5_cross_val",
-    "m3_eval_classification",
-    "m4_feature_importances",
-    # late-round NEW gates (no driver row exists yet — first in line):
-    # the full-parity md5 twins of the minhash pipeline and the simhash
-    # signature stage
-    "dd_minhash_md5",
-    "dd_simhash_md5_sigs",
-    # late gate/oracle-layer review batch (see header note)
-    "q_sessionize",
-    "m21_pr_points",
-    "m22_brier_logloss",
-    "s3_csv_strings",
-    "s24_partitioned_write",
-    "s25_bucketed_join",
-    "s12_description_sidecar",
-    # (2) the remaining r2 rows, oldest in the union of CORRECTNESS files
-    "t1_split_invariants",
-    "s5_excel_roundtrip",
-    "s6_version_roundtrip",
-    "t2_trim_equal_counts",
-    "t3_trim_proportional_counts",
-    "t4_trim_majority_counts",
-    "tx_lang_id",
-    "tx_fingerprint_md5",
-    "mm_feature_digest",
-    "mm_media_dedup",
-    "pipe_prepare_corpus",
-    "tx_redact_pii",
-    "tx_strip_html",
-    "tx_repetition",
-    "s_jsonl_roundtrip",
-    "s_orc_roundtrip",
-    "t8_hash_split",
-    # (3) the 2 oldest r3 rows that are ALSO late-batch-modified (their
-    # oracles now interpolate _AUC_BASE_SQL); the other r3 rows move to
-    # the r12 stale list
-    "m19_roc_points",
-    "m18_roc_auc",
-    # --- driver window ends here (50 entries above) ---
-]
-assert len(_R11_PRIORITY) == 50 and len(set(_R11_PRIORITY)) == 50
-ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _R11_PRIORITY},
-    **{n: f for n, f in ALL_QUERIES.items() if n not in set(_R11_PRIORITY)},
-}
-
-# ---- ROUND-12 driver priority window (VERDICT r11 item 7): the 7
-# round-12-modified gates first — b8/b9 (new survival contracts),
-# ss_ivf_topk (graduated, exact integer-grid quantizer), q_rfm_segments
-# (melted one-pass rank), m25_ndcg (checkpointed scored frame), and the
-# two md5 twins (explicit whitespace class + structural integer votes;
-# outputs verified identical, re-greened as the twins' contract is the
-# round's most-touched surface) — then strictly oldest-driver-row-first
-# from the CORRECTNESS_r01-r11 union: the 5 r2 rows, then the r3 block in
-# registry order until the window holds 50. The 26 other gates whose
-# oracles changed only by the \s -> explicit-class rewrite are verified
-# output-identical by the full r12 sweeps (the corpus has no \x0b), so
-# they rotate on staleness like any unmodified gate (see COVERAGE.md).
-_R12_PRIORITY = [
-    # -- round-12-modified gates (i8 graduated late-round: hash-RNG
-    # Box-Muller EM twin — see i8_impute_em)
-    "b8_smote_tomek",
-    "b9_smote_enn",
-    "ss_ivf_topk",
-    "i8_impute_em",
-    "q_rfm_segments",
-    "m25_ndcg",
-    "dd_minhash_md5",
-    "dd_simhash_md5_sigs",
-    # -- stalest: last driver row r2
-    "tx_token_count",
-    "tx_bpe_count",
-    "mm_frame_plan",
-    "p15_numeric_summary",
-    "ss_quantize_int8",
-    # -- stalest: last driver row r3, registry order
-    "tx_line_dedup",
-    "tx_unigram_logprob",
-    "q19_disjunctive_revenue",
-    "q_window_suite",
-    "q_grouping_sets",
-    "pipe_clean_corpus",
-    "q_salted_join",
-    "q_not_exists",
-    "q_correlated_scalar",
-    "tx_pack_sequences",
-    "tx_mixture_plan",
-    "m15_grouped_ols",
-    "q_attribution",
-    "tx_chunk_documents",
-    "p16_grouped_percentiles",
-    "q_exists_semi",
-    "tx_top_ngrams",
-    "p17_outliers",
-    "s_diff_versions",
-    "tx_lang_stats",
-    "q_null_safe_join",
-    "ss_brute_topk",
-    "ss_brute_pairs",
-    "q6_forecast_revenue",
-    "q14_promo_share",
-    "q18_large_orders",
-    "q_resample_gapfill",
-    "t9_stratified_sample",
-    "e18_bucketize",
-    "p18_key_skew",
-    "tx_c4_filters",
-    "tx_domain_stats",
-    "q_range_frame",
-    "m16_lift_table",
-    "q_funnel",
-    "q_cohort_retention",
-    "p20_expectations",
-    # --- driver window ends here (50 entries above) ---
-]
-assert len(_R12_PRIORITY) == 50 and len(set(_R12_PRIORITY)) == 50
-ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _R12_PRIORITY},
-    **{n: f for n, f in ALL_QUERIES.items() if n not in set(_R12_PRIORITY)},
-}
-
-# ---- ROUND-13 driver priority window (VERDICT r12 item 4): the 6
-# round-13-modified gates first — b1/b6/b7 + i7 (the seed/weight-frame
-# lazy_local_checkpoint plan collapses: cached re-derivations 7/15/22/7
-# -> 3 each) and b8/b9 (smote changed under them; the only deliberate
-# r12-window overlaps) — then strictly oldest-driver-row-first from the
-# CORRECTNESS_r01-r12 union: the 5 r3 rows the r12 window could not fit,
-# then the r4 block in name order until the window holds 50.
-# (ss_ivf_topk gained a recall-floor UNIT test this round but its gate
-# code is unchanged, so it rotates on staleness like any other gate.)
-_R13_PRIORITY = [
-    # -- round-13-modified gates
-    "b1_smote_counts",
-    "b6_adasyn_counts",
-    "b7_borderline_counts",
-    "b8_smote_tomek",
-    "b9_smote_enn",
-    "i7_hot_deck",
-    # -- stalest driver rows: the 5 displaced r3 rows
-    "q_event_transitions",
-    "q_fuzzy_pairs",
-    "q_seasonal_anomaly",
-    "s15_incremental_rollup",
-    "ss_label_centroids",
-    # -- then the r4 block, name order
-    "e19_winsorize",
-    "e20_robust_scale",
-    "e21_group_scale",
-    "e22_woe_encode",
-    "e23_information_value",
-    "f9_align_columns",
-    "m17_calibration",
-    "m20_group_ttest",
-    "m24_confusion_matrix",
-    "m25_regression_metrics",
-    "p22_chi2_mi",
-    "p23_ks_drift",
-    "p25_approx_distinct_quality",
-    "p26_k_anonymity",
-    "p27_benford",
-    "pipe_web_hygiene",
-    "q10_returned_revenue",
-    "q12_priority_by_status",
-    "q13_order_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q22_dormant_customers",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_profit_by_nation",
-    "q_basket_lift",
-    "q_bm25",
-    "q_ewma",
-    "q_gini",
-    "q_interval_join",
-    "q_max_concurrency",
-    "q_recency_features",
-    "q_sql_surface",
-    "q_twap",
-    "s17_zorder_layout",
-    "st_enriched_segments",
-    "t10_group_sample",
-    "t11_weighted_sample",
-    "tx_blocklist_filter",
-    # --- driver window ends here (50 entries above) ---
-]
-assert len(_R13_PRIORITY) == 50 and len(set(_R13_PRIORITY)) == 50
-ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _R13_PRIORITY},
-    **{n: f for n, f in ALL_QUERIES.items() if n not in set(_R13_PRIORITY)},
-}
-
-# ---- ROUND-14 driver priority window (VERDICT r13 item 4): the 10
-# round-14-modified gates first — the ranged sweep-line headline + its
-# new single-task twin, the five distinct-value-cumulative gates whose
-# operators moved onto ranged_cumsum (p23/p24/m45/p33/e24), and the
-# three mixing/packing gates whose NULL guards went lazy-in-plan — then
-# strictly oldest-driver-row-first from the CORRECTNESS_r01-r13 union:
-# the two r4 rows the r13 window could not fit, then the r5 block in
-# name order until the window holds 50. Zero overlap with the r13
-# window by construction (every r13 name has union-last = 13).
-_R14_PRIORITY = [
-    # -- round-14-modified gates (ml_dbscan_ivf is NEW this round — the
-    # IVF scale path the sf1 probe demanded; it must see a driver row)
-    "ml_dbscan_ivf",
-    "q_max_concurrency",
-    "q_max_concurrency_single",
-    "p23_ks_drift",
-    "p24_spearman",
-    "m45_mannwhitney",
-    "p33_weighted_median",
-    "e24_quantile_transform",
-    "tx_pack_sequences",
-    "tx_mixture_plan",
-    "tx_temperature_mix",
-    # -- late-r14 score-curve port (ranged_cumsum/ranged_rank under all
-    # nine) — round-modified, so they displace the 9 newest fill rows
-    "m16_lift_table",
-    "m18_roc_auc",
-    "m19_roc_points",
-    "m21_pr_points",
-    "m24_conformal",
-    "m33_best_split",
-    "m34_best_f1",
-    "m40_psm_att",
-    "m42_qini",
-    # -- late-r14 encoder code-map port (ranged_rank assignment; e4's
-    # total became a broadcast scalar) — also round-modified
-    "e2_label_encode",
-    "e4_frequency_encode",
-    "e5_binary_encode",
-    "e9_onehot_hash",
-    # -- late-r14 vocab-family port (limit-first top-k cuts; dsir_select
-    # on ranged_rank) — also round-modified
-    "tx_bpe_pairs",
-    "tx_dsir_select",
-    "tx_pmi_collocations",
-    "tx_vocab_coverage",
-    "tx_zipf_slope",
-    # -- stalest driver rows: the 2 remaining r4 rows
-    "tx_script_stats",
-    "tx_url_canonicalize",
-    # -- then the r5 block, name order
-    "dd_prefix_jaccard",
-    "m23_ridge_path",
-    "m26_classification_report",
-    "m27_sliced_report",
-    "ml_kmeans",
-    "ml_pca_contract",
-    "p28_moments",
-    "p29_l_diversity",
-    "p30_dp_counts",
-    "p34_ref_integrity",
-    "pipe_golden_record",
-    "q_abc_brands",
-    "q_active_users",
-    "q_attribution_models",
-    "q_churn_labels",
-    "q_event_patterns",
-    "q_hierarchy_flatten",
-    "q_join_cardinality",
-    "q_pagerank",
-    # --- driver window ends here (50 entries above; the curve-gate,
-    # encoder and vocab swaps slid q_revenue_bridge, q_rolling_corr,
-    # q_time_to_convert, q_triangles, s18_schema_diff,
-    # s19_compaction_plan, s20_content_hash, s21_bin_manifest,
-    # s22_range_boundaries, ss_random_project, st_sliding_topk,
-    # t12/t13/t14, t16 and tx_diversity to the r15 backlog) ---
-]
-assert len(_R14_PRIORITY) == 50 and len(set(_R14_PRIORITY)) == 50
-ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _R14_PRIORITY},
-    **{n: f for n, f in ALL_QUERIES.items() if n not in set(_R14_PRIORITY)},
-}
-
-# ---- ROUND-15 driver priority window (VERDICT r14 item 3 / the r14
-# ROTATION TODO): the 3 round-15-modified gates first — m42_qini (the
-# ADVICE NULL/NaN desc-placement fix in qini_curve), ml_dbscan_ivf (the
-# presentation orderBy dropped from ivf_candidate_pairs + the measured
-# recall floor), tx_pack_sequences (the NULL guard moved inside the
-# windowed offset sum) — then strictly oldest-driver-row-first from the
-# CORRECTNESS_r01-r14 union (last round containing each name, ascending,
-# name tie-break): exactly the TODO's backlog — tx_vocab_overlap + the
-# 16 late-r14-displaced fills, then the r6 block until the window holds
-# 50. Overlap with the r14 window = the 3 modified gates, deliberate.
-_R15_PRIORITY = [
-    # -- round-15-modified gates
-    "m42_qini",
-    "ml_dbscan_ivf",
-    "tx_pack_sequences",
-    # -- displaced-fill backlog (union-last r5) + tx_vocab_overlap
-    "q_revenue_bridge",
-    "q_rolling_corr",
-    "q_time_to_convert",
-    "q_triangles",
-    "s18_schema_diff",
-    "s19_compaction_plan",
-    "s20_content_hash",
-    "s21_bin_manifest",
-    "s22_range_boundaries",
-    "ss_random_project",
-    "st_sliding_topk",
-    "t12_group_weighted_sample",
-    "t13_negative_sample",
-    "t14_cluster_safe_split",
-    "t16_quota_allocation",
-    "tx_diversity",
-    "tx_vocab_overlap",
-    # -- r6 block, name order
-    "m23_isotonic_calibration",
-    "m30_kaplan_meier",
-    "m31_nmi",
-    "m32_ari",
-    "m35_pair_confusion",
-    "m36_trend",
-    "m37_krippendorff",
-    "m38_bootstrap_ci",
-    "m39_nelson_aalen",
-    "m41_did",
-    "m43_cohens_kappa",
-    "m44_logrank",
-    "m46_cuped",
-    "ml_davies_bouldin",
-    "ml_dbscan",
-    "ml_silhouette",
-    "p35_null_patterns",
-    "p36_cramers_v",
-    "q_acf",
-    "q_adamic_adar",
-    "q_cusum_changepoint",
-    "q_rank_fusion",
-    "q_semi_additive",
-    "q_skyline",
-    "ss_scalar_quantize",
-    "tx_bigram_lm",
-    "tx_novelty",
-    "b10_bagging_floor",
-    "dd_components",
-    "dd_keep_canonical",
-    # --- driver window ends here (50 entries above; the remaining r6
-    # tail — e17_label_round, e22_loo_target_encode, f10/f11/f12, the
-    # i4 family, i6 — heads the r16 backlog) ---
-]
-assert len(_R15_PRIORITY) == 50 and len(set(_R15_PRIORITY)) == 50
-ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _R15_PRIORITY},
-    **{n: f for n, f in ALL_QUERIES.items() if n not in set(_R15_PRIORITY)},
-}
-
-# ------------------------------------------------------------ round-16 rotation
-# Delivered per the r15 TODO above and VERDICT r15 item 9. Head: the 13
-# gates whose implementing code round 16 modified — the Arrow MinHash
-# signature kernel + dispatch (dd_minhash_pairs / dd_minhash_md5), the
-# Arrow simhash per-token kernel + dispatch (dd_simhash_pairs /
-# dd_simhash_md5_sigs), the staged tokenize projections in text.py
-# (tx_quality, tx_lang_id, tx_lang_stats, m43_cohens_kappa), the
-# thread-pool fold/trial overlap in ml/tuning.py (m5/m6/m7/m9), and the
-# Arrow exact-Lloyd assign in similarity.py (ss_ivf_topk, hash-parity).
-# Tail: strictly oldest-driver-row-first from the CORRECTNESS_r01-r15
-# union (last round containing each name, ascending, name tie-break) —
-# exactly the r8-stale backlog the TODO predicted (e17, e22, f10-f12,
-# the i4/i6 families, then the r10/r11 blocks) until the window holds 50.
-_R16_PRIORITY = [
-    # -- round-16-modified gates
-    "dd_minhash_pairs",
-    "dd_minhash_md5",
-    "dd_simhash_pairs",
-    "dd_simhash_md5_sigs",
-    "tx_quality",
-    "tx_lang_id",
-    "tx_lang_stats",
-    "m43_cohens_kappa",
-    "m5_cross_val",
-    "m6_random_search_trials",
-    "m7_tpe_trials",
-    "m9_learning_curve",
-    "ss_ivf_topk",
-    # -- oldest-row-first backlog (union-last r8)
-    "e17_label_round",
-    "e22_loo_target_encode",
-    "f10_dtype_align",
-    "f11_header_strip",
-    "f12_feature_projection",
-    "i4_interpolate",
-    "i4_interpolate_ranged",
-    "i4_interpolate_single",
-    "i6_impute_mice",
-    "i6_mice_rf",
-    "m11_model_roundtrip",
-    "m13_scorer_suite",
-    "m1_scaler_stats",
-    "m29_time_series_cv",
-    "p19_psi_drift",
-    "p37_hll_shard_merge",
-    "pipe_entity_resolution",
-    "q17_small_qty_revenue",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q_bloom_prejoin",
-    "s16_scd2",
-    "s7_paired_sink",
-    "s9_version_lineage",
-    "tx_boilerplate",
-    "tx_bpe_apply",
-    "tx_contamination",
-    "tx_span_dedup",
-    "tx_tfidf",
-    # -- union-last r10
-    "dd_containment",
-    "dd_incremental_pairs",
-    "dd_ngram_jaccard",
-    "e3_target_encode",
-    "m10_linear_shap",
-    "p10_example_values",
-    "p11_column_range",
-    "p12_correlation",
-    # --- driver window ends here (50 entries above; the remaining r10
-    # tail — p13_distinct_counts, p15_outlier_bounds, ... — heads the
-    # r17 backlog) ---
-]
-assert len(_R16_PRIORITY) == 50 and len(set(_R16_PRIORITY)) == 50
-ALL_QUERIES = {
-    **{n: ALL_QUERIES[n] for n in _R16_PRIORITY},
-    **{n: f for n, f in ALL_QUERIES.items() if n not in set(_R16_PRIORITY)},
-}
-
-# ---- ROUND-17 ROTATION TODO (for the next round's builder): after
-# CORRECTNESS_r16 lands, build _R17_PRIORITY as: any round-17-modified
-# gates first, then oldest-row-first (recompute from the
-# CORRECTNESS_r*.json union — last round containing each name,
-# ascending, name as tie-break) to fill 50 — the stalest rows are the
-# r10 tail this window could not fit (p13_distinct_counts,
-# p15_outlier_bounds, ...) — and update the window-pin test
-# (test_r16_gates_registered_and_windowed) to the new list.

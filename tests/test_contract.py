@@ -7,6 +7,7 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
+from ml_data_pipeline_spark.queries import ALL_QUERIES
 from tools.verify_local import TABLES, canon_rows
 
 FAST_SUBSET = [
@@ -31,6 +32,9 @@ def test_every_oracle_has_a_query():
     qs, os_ = entrymod.queries(), entrymod.oracle_sql()
     assert set(os_) <= set(qs)
     assert len(qs) >= 50
+    # the gate-window reorder loses and rebinds nothing
+    assert len(qs) == len(ALL_QUERIES) and set(qs) == set(ALL_QUERIES)
+    assert all(qs[n] is ALL_QUERIES[n] for n in qs)
 
 
 @pytest.fixture(scope="module")

@@ -278,16 +278,19 @@ def test_r8_sink_ml_gates_registered():
 
 
 def test_r16_gates_registered_and_windowed():
-    """The first-50 driver window is exactly _R16_PRIORITY (the 13
+    """The gate window is the rule in __spark_entry__: the 13
     r16-modified gates first — the Arrow MinHash/simhash kernels, the
     staged tokenize projections, the thread-pool CV overlap, the Arrow
-    exact-Lloyd assign — then strictly oldest-driver-row-first from the
-    CORRECTNESS_r01-r15 union); every windowed gate is oracle-registered."""
+    exact-Lloyd assign — then stalest CORRECTNESS row first, name as
+    tie-break; every windowed gate is oracle-registered."""
+    import __spark_entry__ as entrymod
     from ml_data_pipeline_spark.oracles import ALL_ORACLES
-    from ml_data_pipeline_spark.queries import _R16_PRIORITY
 
-    window = list(Q.ALL_QUERIES)[:50]
-    assert window == _R16_PRIORITY
+    order = list(entrymod.queries())
+    assert order[:13] == entrymod._WINDOW_HEAD
+    last = entrymod._last_rounds(entrymod._HERE)
+    keys = [(last.get(n, 0), n) for n in order[13:]]
+    assert keys == sorted(keys)
     for g in (
         "dd_minhash_pairs",
         "dd_simhash_pairs",
@@ -299,11 +302,39 @@ def test_r16_gates_registered_and_windowed():
         "m9_learning_curve",
         "ss_ivf_topk",
     ):
-        assert g in window[:13], g
+        assert g in order[:13], g
         # the xxhash64 dd_* headline gates are the standing rows-only
         # carve-outs (their md5 twins carry the value oracle)
         if g not in ("dd_minhash_pairs", "dd_simhash_pairs"):
             assert g in ALL_ORACLES, g
+
+
+def test_window_order_rule(tmp_path):
+    """Never-seen names lead the tail, ties break by name, CORRECTNESS
+    files from the window round on are ignored; with no files the tail is
+    name order; an unregistered head name is a KeyError."""
+    import json
+
+    import __spark_entry__ as entrymod
+
+    head = entrymod._WINDOW_HEAD
+    rnd = entrymod._WINDOW_ROUND
+    registry = {n: object() for n in [*head, "zeta", "beta", "alpha", "gamma", "new"]}
+    for r, names in ((1, ["alpha", "beta", "gamma"]), (3, ["alpha"]), (rnd, ["beta"])):
+        (tmp_path / f"CORRECTNESS_r{r:02d}.json").write_text(
+            json.dumps({n: {} for n in names})
+        )
+    got = entrymod._window_order(registry, str(tmp_path))
+    assert list(got) == [*head, "new", "zeta", "beta", "gamma", "alpha"]
+    assert all(got[n] is registry[n] for n in registry)
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    got = entrymod._window_order(registry, str(empty))
+    assert list(got) == [*head, "alpha", "beta", "gamma", "new", "zeta"]
+
+    with pytest.raises(KeyError):
+        entrymod._window_order({"alpha": object()}, str(empty))
 
 
 @pytest.mark.parametrize(
