@@ -409,6 +409,35 @@ def _shingle_minhash_arrow(
 
     return normed.mapInArrow(compute, schema=f"id {id_type}, signature array<bigint>")
 
+def _minhash_bands(sigs: DataFrame, r: int, bands: int, hash_fn: str) -> DataFrame:
+    """(id, signature) → one (id, signature, band, bucket) row per band; the
+    bucket keys signature slots [band*r, band*r + r). The band structs are
+    one SQL expression, one py4j parse: at 8 bands × 4 slots the frame
+    costs 38 py4j commands to build, 542 with an F.lit/F.element_at/F.struct
+    per part (tests/test_sql_builders.py)."""
+    def band_key(b: int) -> str:
+        slots = ", ".join(f"element_at(signature, {b * r + j + 1})" for j in range(r))
+        if hash_fn == "xxhash64":
+            # hash the r slot LONGS directly (r15): xxhash64 is variadic,
+            # so the string casts + concat_ws the old shape paid per slot
+            # (4 long→string casts + a join per band per row, ×2 join
+            # sides) are pure overhead — the bucket is only an equality
+            # key, and equal slots hash equal either way. Pair output
+            # verified identical at sf0.001/0.01/0.1
+            # (OPTIMIZATION_r15.md, "Changes taken" item 7); collisions
+            # ADD candidates (never drop them) and the est_jaccard >=
+            # threshold verify filters them exactly as it filters
+            # same-band non-duplicates.
+            return f"xxhash64({slots})"
+        # md5 twin path: the bucket stays the plain slot-concat STRING so
+        # the DuckDB oracle can replay it verbatim
+        return f"concat_ws(',', {slots})"
+
+    structs = ", ".join(f"struct({b} AS band, {band_key(b)} AS bucket)" for b in range(bands))
+    return sigs.select(
+        "id", "signature", F.expr(f"explode(array({structs})) AS bb")
+    ).select("id", "signature", "bb.band", "bb.bucket")
+
 def minhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -445,40 +474,7 @@ def minhash_near_duplicates(
     # runs it exactly once; both join sides read the stored blocks.
     sigs = shingle_minhash(df, text_col, id_col, num_hashes, shingle_k, hash_fn).localCheckpoint()
 
-    def _band_key(b: int):
-        if hash_fn == "xxhash64":
-            # hash the r slot LONGS directly (r15): xxhash64 is variadic,
-            # so the string casts + concat_ws the old shape paid per slot
-            # (4 long→string casts + a join per band per row, ×2 join
-            # sides) are pure overhead — the bucket is only an equality
-            # key, and equal slots hash equal either way. Pair output
-            # verified identical at sf0.001/0.01/0.1
-            # (OPTIMIZATION_r15.md, "Changes taken" item 7); collisions
-            # ADD candidates (never drop them) and the est_jaccard >=
-            # threshold verify filters them exactly as it filters
-            # same-band non-duplicates.
-            return F.xxhash64(*[F.element_at("signature", b * r + j + 1) for j in range(r)])
-        # md5 twin path: the bucket stays the plain slot-concat STRING so
-        # the DuckDB oracle can replay it verbatim
-        return F.concat_ws(
-            ",", *[F.element_at("signature", b * r + j + 1) for j in range(r)]
-        )
-
-    banded = sigs.select(
-        "id",
-        "signature",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _band_key(b).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "signature", "bb.band", "bb.bucket")
+    banded = _minhash_bands(sigs, r, bands, hash_fn)
     left = banded.select(
         F.col("id").alias("id_a"), F.col("signature").alias("sig_a"), "band", "bucket"
     )
@@ -1337,6 +1333,33 @@ def _simhash_per_tok_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFra
 
     return normed.mapInArrow(compute, schema=f"id {id_type}, h bigint, __cnt bigint")
 
+def _simhash_bands(sigs: DataFrame, max_hamming: int) -> DataFrame:
+    """(id, simhash) → one (id, simhash, block, v0, v1, v2) row per 3-block
+    combination of the d + 3 blocks (see simhash_near_duplicates). The
+    C(d+3, 3) structs are one SQL expression, one py4j parse: at d = 3 the
+    frame costs 34 py4j commands to build, 1022 with Column calls per
+    block value (tests/test_sql_builders.py)."""
+    import itertools
+
+    nblocks = max_hamming + 3
+    widths = [64 // nblocks + (1 if i < 64 % nblocks else 0) for i in range(nblocks)]
+    offs = [sum(widths[:i]) for i in range(nblocks)]
+    structs = ", ".join(
+        "struct("
+        + ", ".join(
+            [f"{ci} AS block"]
+            + [
+                f"shiftrightunsigned(simhash, {offs[b]}) & {(1 << widths[b]) - 1} AS v{j}"
+                for j, b in enumerate(combo)
+            ]
+        )
+        + ")"
+        for ci, combo in enumerate(itertools.combinations(range(nblocks), 3))
+    )
+    return sigs.select(
+        "id", "simhash", F.expr(f"explode(array({structs})) AS bv")
+    ).select("id", "simhash", "bv.*")
+
 def simhash_near_duplicates(
     df: DataFrame,
     text_col: str = "text",
@@ -1364,39 +1387,14 @@ def simhash_near_duplicates(
     explode (d=3 → 20 rows/doc, narrow) — the explode grows LINEARLY in
     n while the collision term it buys down grows QUADRATICALLY, exactly
     the trade a 100-TB corpus wants."""
-    import itertools
-
     if not 0 <= max_hamming <= 61:
         raise ValueError("max_hamming must be in [0, 61] for 64-bit simhash")
-    nblocks = max_hamming + 3
-    widths = [64 // nblocks + (1 if i < 64 % nblocks else 0) for i in range(nblocks)]
-    offs = [sum(widths[:i]) for i in range(nblocks)]
-    combos = list(itertools.combinations(range(nblocks), 3))
     # localCheckpoint, not lazy cache — same concurrent-cold-scan
     # rationale as minhash_near_duplicates
     sigs = simhash_signatures(
         df, text_col, id_col, idf_weighted=idf_weighted
     ).localCheckpoint()
-    banded = sigs.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(ci).alias("block"),
-                        *[
-                            F.shiftrightunsigned(F.col("simhash"), offs[b])
-                            .bitwiseAND(F.lit((1 << widths[b]) - 1))
-                            .alias(f"v{j}")
-                            for j, b in enumerate(combo)
-                        ],
-                    )
-                    for ci, combo in enumerate(combos)
-                ]
-            )
-        ).alias("bv"),
-    ).select("id", "simhash", "bv.*")
+    banded = _simhash_bands(sigs, max_hamming)
     keys = ["block", "v0", "v1", "v2"]
     a = banded.select(
         F.col("id").alias("id_a"), F.col("simhash").alias("sh_a"), *keys

@@ -16,6 +16,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ml_data_pipeline_spark.functions.sql_text import sql_ident, sql_string
+
 def numeric_columns(df: DataFrame) -> list[str]:
     """Schema-driven numeric-column selection (ref: select_dtypes(include=[np.number]),
     /root/reference/checking_data_formats_ui.py:296)."""
@@ -42,16 +44,6 @@ def shape_census(df: DataFrame) -> DataFrame:
     rows = [(t, c, n_rows, len(df.columns)) for t, c in sorted(by_type.items())]
     return spark.createDataFrame(rows, "dtype string, n_cols_of_type int, n_rows long, n_cols int")
 
-def _sqlq(name: str) -> str:
-    """Backtick-quote an identifier for embedding in a SQL string."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _sqls(text: str) -> str:
-    """Single-quote a string literal for embedding in a SQL string."""
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def missing_counts(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """P2 — per-column null count, null %, and >50% flag, sorted desc
     (ref /root/reference/checking_data_formats_ui.py:382-401).
@@ -65,7 +57,7 @@ def missing_counts(df: DataFrame, columns: list[str] | None = None) -> DataFrame
     aggs = [F.sum(F.col(c).isNull().cast("long")).alias(c) for c in columns]
     totals = df.agg(F.count(F.lit(1)).alias("__n"), *aggs)
     # unpivot the single aggregate row: stack(k, 'c1', c1, ...) — stays in JVM
-    stack_args = ", ".join(f"{_sqls(c)}, {_sqlq(c)}" for c in columns)
+    stack_args = ", ".join(f"{sql_string(c)}, {sql_ident(c)}" for c in columns)
     unpivoted = totals.selectExpr(
         "__n", f"stack({len(columns)}, {stack_args}) as (column, n_missing)"
     )
@@ -102,7 +94,7 @@ def distinct_counts(df: DataFrame, columns: list[str] | None = None) -> DataFram
     columns = columns or categorical_columns(df)
     aggs = [F.countDistinct(F.col(c)).alias(c) for c in columns]
     row = df.agg(*aggs)
-    stack_args = ", ".join(f"{_sqls(c)}, {_sqlq(c)}" for c in columns)
+    stack_args = ", ".join(f"{sql_string(c)}, {sql_ident(c)}" for c in columns)
     return (
         row.selectExpr(f"stack({len(columns)}, {stack_args}) as (column, n_distinct)")
         .orderBy("n_distinct", "column")
@@ -119,7 +111,7 @@ def hll_shard_sketches(
     shard sketches is LOSSLESS versus sketching the whole table in one
     pass — pinned by the p37 gate."""
     return df.groupBy(shard_col).agg(
-        F.expr(f"hll_sketch_agg({_sqlq(column)}, {int(lg_k)})").alias("hll_sketch")
+        F.expr(f"hll_sketch_agg({sql_ident(column)}, {int(lg_k)})").alias("hll_sketch")
     )
 
 
@@ -269,7 +261,7 @@ def correlation_pairs(df: DataFrame, columns: list[str] | None = None) -> DataFr
     # directly — the old name-pair string round-trip split on '|' and
     # mis-parsed any column name containing one (r10 review)
     stack_args = ", ".join(
-        f"{_sqls(a)}, {_sqls(b)}, `__c{i}`" for i, (a, b) in enumerate(pairs)
+        f"{sql_string(a)}, {sql_string(b)}, `__c{i}`" for i, (a, b) in enumerate(pairs)
     )
     return (
         row.selectExpr(

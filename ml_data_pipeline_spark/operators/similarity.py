@@ -14,8 +14,12 @@ one vector — broadcast by construction).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ml_data_pipeline_spark.functions.sql_text import sql_double
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -36,10 +40,17 @@ def cosine_to_query(
     yields NULL (nullif guard — under Spark 4's default ANSI mode an
     unguarded division is a job-killing DIVIDE_BY_ZERO, r10 review), so
     desc ordering ranks it last; a zero-norm QUERY is a caller error and
-    raises up front."""
+    raises up front, and so is a NaN or infinite component (SQL has no
+    literal for one, and it would make every cosine NaN).
+
+    The query array is one SQL expression, one py4j parse, where a
+    ``F.lit`` per component cost a round trip each; ``sql_double`` keeps
+    every component's exact bits."""
+    if not all(math.isfinite(float(v)) for v in query_vector):
+        raise ValueError("cosine_to_query: query vector has a non-finite component")
     if not any(float(v) != 0.0 for v in query_vector):
         raise ValueError("cosine_to_query: query vector has zero norm")
-    q = F.array(*[F.lit(float(v)) for v in query_vector])
+    q = F.expr(f"array({', '.join(sql_double(v) for v in query_vector)})")
     return _dot(F.col(vec_col), q) / F.nullif(
         _norm(F.col(vec_col)) * _norm(q), F.lit(0.0)
     )

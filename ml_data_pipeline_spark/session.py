@@ -36,6 +36,22 @@ def get_spark(
       so re-running a query recompiled nearly all of them. The cache is
       JVM-wide and static: it takes this size only if no session compiled
       code in this JVM before.
+    - PySpark's call-site capture off
+      (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+      every Column method and ``F.col`` also runs ``getActiveSession``, a
+      conf read, ``PySparkCurrentOrigin.set``/``clear`` and a Python stack
+      walk: 5–7 extra py4j round trips per Column node (``F.col("a") + 1``:
+      24 commands instead of 4): ~40% of the commands a warm corpus
+      benchmark pass sends while building its plans. Errors keep their
+      error class and message; the only context lost is the
+      ``== DataFrame ==`` "was called from" line, which names the JVM
+      function and a JVM frame (``"divide"``, ``NativeMethodAccessorImpl``)
+      instead of the Python operator and ``file.py:line``. The flag is
+      a static conf, so ``spark.conf.set`` on a running session raises
+      ``CANNOT_MODIFY_STATIC_CONFIG``; to get call sites back, start the
+      session with the flag ``"true"`` before calling ``get_spark``, which
+      then returns that session (whose static settings stay as started).
+      PySpark reads the flag once per process, at the first Column call.
     - Python workers start from the engine's daemon module
       (``spark.python.daemon.module``, see ``_pydaemon``). Every Python task
       calls ``importlib.invalidate_caches()``, and on CPython < 3.13 that
@@ -75,6 +91,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", "1024")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.python.daemon.module", "ml_data_pipeline_spark._pydaemon")
         .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(worker_path))
     )
